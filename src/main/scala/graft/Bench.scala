@@ -31,12 +31,19 @@ object Bench {
       .map(_.getUsage.getUsed).sum / 1048576.0
     val heapMb = ManagementFactory.getMemoryMXBean
       .getHeapMemoryUsage.getUsed / 1048576.0
+    // compile volume and the metaspace the generated classes occupy
+    // (GraftSession sizes the codegen cache that holds them)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileMs = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .compileTime / 1000000L
+    val metaspaceMb = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum / 1048576.0
     val rdds = spark.sparkContext.getRDDStorageInfo
     val storMb = rdds.map(i => i.memSize + i.diskSize).sum / 1048576.0
     // math.rint + plain interpolation: Double.toString is locale-free
     // (the f-interpolator is not, and this line must stay valid JSON)
     def r1(x: Double): Double = math.rint(x * 10) / 10
-    s"""{"at":"$at","gc_ms":$gcMs,"jit_ms":$jitMs,"code_cache_mb":${r1(codeCacheMb)},"heap_mb":${r1(heapMb)},"storage_mb":${r1(storMb)},"storage_rdds":${rdds.length}}"""
+    s"""{"at":"$at","gc_ms":$gcMs,"jit_ms":$jitMs,"code_cache_mb":${r1(codeCacheMb)},"heap_mb":${r1(heapMb)},"storage_mb":${r1(storMb)},"storage_rdds":${rdds.length},"codegen_compiles":$compiles,"codegen_compile_ms":$compileMs,"metaspace_mb":${r1(metaspaceMb)}}"""
   }
 
   /** Releases every sealed session store: drop the Memo references,

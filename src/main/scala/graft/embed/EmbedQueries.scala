@@ -1658,12 +1658,14 @@ object EmbedQueries {
     // (cos desc, cand) rank) runs in ONE mapPartitions task; above them
     // the DataFrame walk is the corpus-scale path, unchanged — and
     // beamWalk itself stays untouched for c136's sweep and the
-    // ScaleSmoke frontier pin. `graft.beam.impl` overrides for specs.
-    val nVec = e.count()
-    val nEdge = und.count()
-    val impl = spark.conf.getOption("graft.beam.impl")
-      .getOrElse(if (nEdge <= PrLocalMaxEdges && nVec <= KcLocalMaxVectors
-        && nVec * Dims <= KcLocalMaxElems) "local" else "df")
+    // ScaleSmoke frontier pin. `graft.beam.impl` overrides for specs
+    // (and then skips the gate's two count jobs).
+    val impl = spark.conf.getOption("graft.beam.impl").getOrElse {
+      val nVec = e.count()
+      val nEdge = und.count()
+      if (nEdge <= PrLocalMaxEdges && nVec <= KcLocalMaxVectors
+        && nVec * Dims <= KcLocalMaxElems) "local" else "df"
+    }
     val beam =
       if (impl == "local") {
         val entryOpt = if (entryRow.isNullAt(0)) None else Some(entryRow.getLong(0))
@@ -1824,6 +1826,11 @@ object EmbedQueries {
     */
   val BeamSweep = Seq(2, 4, 8)
 
+  /** Bound on c136's wait for its width walks (seconds at test scale):
+    * a hung walk fails the query naming its width instead of hanging
+    * the session. */
+  val BeamSweepTimeout = scala.concurrent.duration.FiniteDuration(1, "hour")
+
   /** The width-b beam walk C136 sweeps (and C108 ships at a fixed
     * width), on ANY (probes, adjacency, embedding) triple: returns the
     * final beam and the per-hop candidate-row counts. The hop-h
@@ -1914,11 +1921,11 @@ object EmbedQueries {
     // results are deterministic per width and the final union orders by
     // beam_width, so concurrency cannot reorder anything observable.
     val perWidth = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
+      import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
       val pool = java.util.concurrent.Executors.newFixedThreadPool(BeamSweep.size)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(BeamSweep.map { b => Future {
+      val deadline = BeamSweepTimeout.fromNow
+      try BeamSweep.map { b => b -> Future {
         val (beam, hopCounts) = beamWalkCounts(probes, adj, emb, b, BeamHops)
         val scored = hopCounts.sum
         val ks = Seq(1L, b.toLong)
@@ -1936,8 +1943,14 @@ object EmbedQueries {
             col("kh.hits").as("hits"),
             round(col("kh.hits").cast("double") / (lit(nProbes) * col("kh.k")), 6)
               .as("recall"))
-      }}), Duration.Inf)
-      finally pool.shutdown()
+      }}.map { case (b, f) =>
+        try Await.result(f, deadline.timeLeft)
+        catch {
+          case _: TimeoutException => throw new TimeoutException(
+            s"c136: beam width $b walk did not finish within $BeamSweepTimeout")
+        }
+      }
+      finally pool.shutdownNow() // interrupts a walk left running by a timeout
     }
     perWidth.reduce(_ unionByName _).orderBy("beam_width", "k")
   }

@@ -81,13 +81,14 @@ object Clustering {
     *    of magnitude — so the DataFrame loop takes over (measured on a
     *    2M-cell serpentine: DF rounds are ~10× cheaper than RDD rounds).
     * All run identical label algebra (component label = min packed id)
-    * and yield identical labels.
+    * and yield identical labels. The size count runs only where it is
+    * used: for the gate, or to size the `rdd` loop's partitions.
     */
   def connectedComponents4(cells: DataFrame, maxIter: Int = 60): DataFrame = {
     val spark = cells.sparkSession
     val keys = cells.select(col("x").cast("long").as("x"), col("y").cast("long").as("y"))
       .distinct().seal()
-    val n = keys.count()
+    lazy val n = keys.count()
     val impl = spark.conf.getOption("graft.cc.impl")
       .getOrElse(if (n <= SmallLoopMax) "local" else "df")
     impl match {
