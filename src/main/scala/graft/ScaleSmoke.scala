@@ -1020,10 +1020,9 @@ object ScaleSmoke {
     // store flat. Wall time printed as the measured floor (c136's
     // convention: timing is diagnostic, the row bound is the REQUIRE).
     t0 = System.nanoTime()
-    val d30 = graft.streaming.StreamingQueries.d30StreamOuterJoin(
+    val (d30, prog) = graft.streaming.StreamingQueries.d30Replay(
       spark, "/root/testdata/sf0.1")
     val d30Rows = d30.count()
-    val prog = graft.streaming.StreamingQueries.lastReplayProgress
     // file-consuming batches by source-offset advance — the same
     // pruning-immune metric the in-operator require uses (r18)
     val dataBatches = prog.count(_.sources.exists(s =>

@@ -7,11 +7,11 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.RowDeltaUtils
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -50,6 +50,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `WriterCommitMessage`s. Single-JVM local mode by design — the
   * declared §3 non-goal boundary covers durable storage, not the
   * connector contract.
+  *
+  * Both scans (the plain read and the row-level group scan) snapshot
+  * the rows when they are built and report EXACT statistics of that
+  * snapshot (`SupportsReportStatistics`: row count, and the summed
+  * byte size of the stored rows), so the planner picks join strategies
+  * from real sizes — a broadcast while the table is small, a shuffle
+  * once it is not — instead of treating an unsized table as
+  * `spark.sql.defaultSizeInBytes` (Long.MaxValue). A plan built after
+  * a commit sees the new counts.
   *
   * Registered in [[graft.GraftSession]] as catalog `graft`
   * (`spark.sql.catalog.graft`), so plain SQL works:
@@ -170,16 +179,39 @@ private[sources] class UpsertScanBuilder(state: UpsertStore.State) extends ScanB
   override def build(): Scan = new UpsertScan(state)
 }
 
-private[sources] class UpsertScan(state: UpsertStore.State) extends Scan with Batch {
+/** A read of the rows `state` holds when the scan is built; reports
+  * their exact statistics. */
+private[sources] abstract class UpsertSnapshotScan(state: UpsertStore.State)
+    extends Scan with Batch with SupportsReportStatistics {
+  protected val snapshot: Array[InternalRow] = state.rows
+
   override def readSchema(): StructType = state.schema
   override def toBatch: Batch = this
+  override def createReaderFactory(): PartitionReaderFactory = UpsertReaderFactory
+
+  private lazy val stats: Statistics = {
+    val fallback = state.schema.defaultSize.toLong
+    val bytes = snapshot.iterator.map {
+      case u: UnsafeRow => u.getSizeInBytes.toLong
+      case _ => fallback
+    }.sum
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
+      override def numRows(): java.util.OptionalLong =
+        java.util.OptionalLong.of(snapshot.length.toLong)
+    }
+  }
+  override def estimateStatistics(): Statistics = stats
+
   // one partition per ~8k rows so a larger table still parallelizes
-  override def planInputPartitions(): Array[InputPartition] = {
-    val rows = state.rows
+  protected def partitions(rows: Array[InternalRow]): Array[InputPartition] =
     if (rows.isEmpty) Array(UpsertPartition(Array.empty))
     else rows.grouped(8192).map(g => UpsertPartition(g): InputPartition).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory = UpsertReaderFactory
+}
+
+private[sources] class UpsertScan(state: UpsertStore.State)
+    extends UpsertSnapshotScan(state) {
+  override def planInputPartitions(): Array[InputPartition] = partitions(snapshot)
 }
 
 private[sources] final case class UpsertPartition(rows: Array[InternalRow])
@@ -303,14 +335,11 @@ private[sources] class UpsertRowLevelOperation(state: UpsertStore.State,
   * side-effect-free and unfiltered there.
   */
 private[sources] class UpsertGroupScan(state: UpsertStore.State)
-    extends Scan with Batch
+    extends UpsertSnapshotScan(state)
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
   import org.apache.spark.sql.connector.expressions
 
   @volatile private[sources] var touched: Option[Set[Int]] = None
-
-  override def readSchema(): StructType = state.schema
-  override def toBatch: Batch = this
 
   override def filterAttributes(): Array[expressions.NamedReference] =
     Array(expressions.Expressions.column(state.shardByName))
@@ -328,15 +357,11 @@ private[sources] class UpsertGroupScan(state: UpsertStore.State)
     if (shardSets.nonEmpty) touched = Some(shardSets.reduce(_ intersect _))
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val rows = touched match {
-      case Some(sh) => state.rows.filter(r => sh(state.shardOfRow(r)))
-      case None => state.rows
-    }
-    if (rows.isEmpty) Array(UpsertPartition(Array.empty))
-    else rows.grouped(8192).map(g => UpsertPartition(g): InputPartition).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory = UpsertReaderFactory
+  override def planInputPartitions(): Array[InputPartition] =
+    partitions(touched match {
+      case Some(sh) => snapshot.filter(r => sh(state.shardOfRow(r)))
+      case None => snapshot
+    })
 }
 
 /** ReplaceData commit at shard granularity: drop the rows of exactly

@@ -90,17 +90,6 @@ object StreamingQueries {
     */
   val StatePartitions = 8
 
-  /** The most recent completed replay's progress entries — captured so
-    * ScaleSmoke's d30 pin can assert the replay MECHANICS (data batches
-    * == staged files, final state rows bounded by open windows, not by
-    * corpus size) without threading StreamingQuery handles through the
-    * driver contract. Meaningful for SERIAL callers only: Verify's
-    * concurrent sweep overwrites it (harmlessly — nothing reads it
-    * there).
-    */
-  @volatile private[graft] var lastReplayProgress:
-    Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = Nil
-
   /** Micro-batches that CONSUMED at least one staged file, measured by
     * source-offset advance — the pruning-immune replay-contract metric
     * (see the comment in [[runToTable]]). Empty staged files count:
@@ -112,17 +101,26 @@ object StreamingQueries {
       s.endOffset != null && s.endOffset != s.startOffset))
 
   private def runToTable(df: DataFrame, name: String, mode: String,
-      requireSingleBatch: Boolean = false, requireDataBatches: Int = 0): DataFrame = {
+      requireSingleBatch: Boolean = false, requireDataBatches: Int = 0): DataFrame =
+    replayToTable(df, name, mode, requireSingleBatch, requireDataBatches)._1
+
+  /** [[runToTable]], also returning this replay's progress entries, so a
+    * caller can assert the replay MECHANICS (ScaleSmoke's d30 pin: data
+    * batches == staged files, final state rows bounded by open windows)
+    * — per invocation, so concurrent replays never see each other's.
+    */
+  private def replayToTable(df: DataFrame, name: String, mode: String,
+      requireSingleBatch: Boolean, requireDataBatches: Int)
+      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
     val spark = df.sparkSession
     val ckpt = track(Files.createTempDirectory(s"graft-ckpt-$name").toString)
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-    try {
+    val progress = try {
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      lastReplayProgress = q.recentProgress.toSeq
       if (requireDataBatches > 0) {
         // multi-file staged replays (d17): the cross-batch state carry is
         // the thing under test, so a staging change that collapses the
@@ -157,8 +155,9 @@ object StreamingQueries {
           s"$name expects a single data micro-batch (oracle contract), " +
             s"got $dataBatches — did the staged source become multi-file?")
       }
+      q.recentProgress.toSeq
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    spark.table(name)
+    (spark.table(name), progress)
   }
 
   private def stream(spark: SparkSession, sfDir: String): DataFrame =
@@ -1116,7 +1115,13 @@ object StreamingQueries {
     * stream (see the inline comment); the result is then exactly the
     * batch LEFT JOIN, which is the oracle.
     */
-  def d30StreamOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
+  def d30StreamOuterJoin(spark: SparkSession, sfDir: String): DataFrame =
+    d30Replay(spark, sfDir)._1
+
+  /** [[d30StreamOuterJoin]] with its replay's progress entries (none
+    * when the corpus has no valid event time and nothing replays). */
+  private[graft] def d30Replay(spark: SparkSession, sfDir: String)
+      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
     import graft.Tables
     import spark.implicits._
     // b55 quarantined view — this replay builds its OWN file stream
@@ -1128,8 +1133,8 @@ object StreamingQueries {
     val maxRow = StreamingOps.normalize(ev)
       .agg(max(unix_micros(col("event_time")))).head
     if (maxRow.isNullAt(0))
-      return Seq.empty[(Long, Long, Long, Long, Long)]
-        .toDF("event_id", "user_id", "err_us", "click_id", "click_us")
+      return (Seq.empty[(Long, Long, Long, Long, Long)]
+        .toDF("event_id", "user_id", "err_us", "click_id", "click_us"), Nil)
     val tsType = ev.schema("ts").dataType
     val maxUs = maxRow.getLong(0)
     def sentinels(us: Long, idBase: Long): DataFrame = {
@@ -1160,11 +1165,10 @@ object StreamingQueries {
     // advance the watermark and the unmatched flush never happens — the
     // replay silently degrades to "got 1 data batch" (observed, hence
     // this comment).
-    runToTable(
-        StreamingOps.intervalJoinOuter(src(), src()),
-        "graft_d30_sink", "append", requireDataBatches = 3)
-      .filter(col("user_id") >= 0L)
-      .orderBy("event_id", "click_id")
+    val (sink, progress) = replayToTable(
+      StreamingOps.intervalJoinOuter(src(), src()),
+      "graft_d30_sink", "append", requireSingleBatch = false, requireDataBatches = 3)
+    (sink.filter(col("user_id") >= 0L).orderBy("event_id", "click_id"), progress)
   }
 
   /** Batch twin of the watermark-flushed outer join: plain LEFT JOIN

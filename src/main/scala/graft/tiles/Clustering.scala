@@ -89,22 +89,59 @@ object Clustering {
     val keys = cells.select(col("x").cast("long").as("x"), col("y").cast("long").as("y"))
       .distinct().seal()
     lazy val n = keys.count()
-    val impl = spark.conf.getOption("graft.cc.impl")
-      .getOrElse(if (n <= SmallLoopMax) "local" else "df")
-    impl match {
+    engine(spark, n) match {
       case "local" => ccLocal(keys)
       case "rdd" => ccRdd(keys, n, maxIter)
       case _ => ccDf(keys, maxIter)
     }
   }
 
+  /** The size gate of [[connectedComponents4]] and
+    * [[incrementalClusters]]: `graft.cc.impl` forces an engine, otherwise
+    * up to [[SmallLoopMax]] cells take the single-task union-find. `n`
+    * is evaluated only when no engine is forced.
+    */
+  private def engine(spark: SparkSession, n: => Long): String =
+    spark.conf.getOption("graft.cc.impl").getOrElse(if (n <= SmallLoopMax) "local" else "df")
+
+  /** Union-find over a set of packed ids under 4-adjacency: each id
+    * unions with its +x/+y neighbors when present (the −x/−y directions
+    * are those same unions seen from the other side), by MIN, so a
+    * component's root IS its smallest packed id. Returns the
+    * path-compressing root lookup.
+    */
+  private def unionFind4(ids: java.util.HashSet[Long]): Long => Long = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrDefault(x, x)
+      while (p != x) {
+        val gp = parent.getOrDefault(p, p)
+        parent.put(x, gp)
+        x = p
+        p = gp
+      }
+      x
+    }
+    def union(a: Long, b: Long): Unit = {
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent.put(rb, ra)
+      else if (rb < ra) parent.put(ra, rb)
+    }
+    ids.forEach { id =>
+      // y+1 stays inside the same x-row iff y+1 < 2^32 (contract:
+      // 0 ≤ y < 2^31, so id+1 can't alias the next row's y=0)
+      if (ids.contains(id + 1L)) union(id, id + 1L)
+      if (ids.contains(id + IdShift)) union(id, id + IdShift)
+    }
+    find
+  }
+
   /** Single-task union-find for small cell sets (see
     * [[connectedComponents4]]): one `mapPartitions` task builds the id
-    * set, unions each id with its +x/+y neighbors when present (the
-    * −x/−y directions are those same unions seen from the other side),
-    * and resolves labels with path compression, unioning by MIN so the
-    * root IS the component's smallest packed id. Runs on an executor,
-    * not the driver — no collect.
+    * set and labels each id with its [[unionFind4]] root. Runs on an
+    * executor, not the driver — no collect.
     */
   private def ccLocal(keys: DataFrame): DataFrame = {
     val spark = keys.sparkSession
@@ -114,32 +151,9 @@ object Clustering {
       .mapPartitions { it =>
         val ids = new java.util.HashSet[Long]()
         it.foreach(ids.add)
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x0: Long): Long = {
-          var x = x0
-          var p = parent.getOrDefault(x, x)
-          while (p != x) {
-            val gp = parent.getOrDefault(p, p)
-            parent.put(x, gp)
-            x = p
-            p = gp
-          }
-          x
-        }
-        def union(a: Long, b: Long): Unit = {
-          val ra = find(a)
-          val rb = find(b)
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
-        }
-        ids.forEach { id =>
-          // y+1 stays inside the same x-row iff y+1 < 2^32 (contract:
-          // 0 ≤ y < 2^31, so id+1 can't alias the next row's y=0)
-          if (ids.contains(id + 1L)) union(id, id + 1L)
-          if (ids.contains(id + IdShift)) union(id, id + IdShift)
-        }
+        val root = unionFind4(ids)
         val out = Iterator.newBuilder[(Long, Long, Long)]
-        ids.forEach(id => out += ((id / IdShift, id % IdShift, find(id))))
+        ids.forEach(id => out += ((id / IdShift, id % IdShift, root(id))))
         out.result()
       }
       .toDF("x", "y", "cluster_id")
@@ -377,20 +391,106 @@ object Clustering {
     *     useful incremental refinement — and deterministic);
     *  3. every other new component gets max(existing id) + its dense
     *     rank by min packed id — id continuation from the persisted max.
-    *
-    * Scale shape: one CC fixpoint over the NEW batch only (a batch is
-    * orders of magnitude smaller than the accumulated state), one
-    * explode×4 equi-join against `existing` for adjacency (O(4·|new|)
-    * shuffle rows, never O(|existing|) fan-out), one 1-row max-id
-    * broadcast, and one unpartitioned dense_rank over DISTINCT fresh
-    * component labels — cardinality = number of NEW clusters in the
-    * batch (solar farms, not tiles), so the single-task window is
-    * bounded by the thing the pipeline is trying to find, not the data.
     * A new component bridging two existing clusters adopts the smaller
     * id and the larger survives unmerged — by design, since persisted
     * ids are immutable here and in the reference.
+    *
+    * Returns `existing` (batch 1) unioned with the labeled new cells
+    * (batch 2). The engine is picked by the [[connectedComponents4]]
+    * size gate on the batch's row count.
+    *
+    * Scale shape. A batch is orders of magnitude smaller than the
+    * accumulated state, so the `local` engine labels it in O(batch)
+    * jobs ([[incrementalLocal]]): one broadcast of the batch's neighbor
+    * keys, then ONE task that reads `existing` narrowly (a map-side
+    * semi-join against those keys, per-partition max ids) and runs the
+    * union-find, the adoption rule and the fresh-id mint. No shuffle,
+    * and the job count does not grow with |existing|; the one task's
+    * scan of `existing` is serial, which at batch-loop sizes (~100k
+    * labels) costs less than the jobs it replaces. Above
+    * [[SmallLoopMax]] batch cells, or with `graft.cc.impl=df|rdd`, the
+    * distributed plan runs instead ([[incrementalPlan]]): one CC
+    * fixpoint over the new batch, one explode×4 equi-join against
+    * `existing` for adjacency (O(4·|new|) shuffle rows, never
+    * O(|existing|) fan-out), one 1-row max-id broadcast, and one
+    * unpartitioned dense_rank over DISTINCT fresh component labels —
+    * cardinality = number of NEW clusters in the batch, so the
+    * single-task window is bounded by the farms the pipeline is trying
+    * to find, not by the data.
     */
   def incrementalClusters(existing: DataFrame, newCells: DataFrame): DataFrame = {
+    val exist = existing.select(col("x").cast("long").as("x"),
+      col("y").cast("long").as("y"), col("cluster_id").cast("long").as("cluster_id"))
+    val labeledNew = engine(existing.sparkSession, newCells.count()) match {
+      case "local" => incrementalLocal(exist, newCells)
+      case _ => incrementalPlan(exist, newCells)
+    }
+    exist.withColumn("batch", lit(1))
+      .unionByName(labeledNew.withColumn("batch", lit(2)))
+  }
+
+  private type Tagged = (Int, Long, Long)
+
+  /** The single-task batch kernel of [[incrementalClusters]]. Its one
+    * task reads three tagged row kinds — 0: a batch cell, 1: an existing
+    * cell 4-adjacent to the batch (with its id), 2: one partition's
+    * max existing id — deduplicates the batch cells in its hash set,
+    * runs [[unionFind4]], lets each component adopt the smallest
+    * adjacent existing id, and numbers the rest max + rank by root
+    * (min packed id). Neighbor ids of cells on the contract edges
+    * (x = 0, y = 0, y = 2^31−1) pack to ids no contract cell has, so
+    * they never match.
+    */
+  private def incrementalLocal(exist: DataFrame, newCells: DataFrame): DataFrame = {
+    val spark = exist.sparkSession
+    import spark.implicits._
+    val batch = newCells.select(
+      packId(col("x").cast("long"), col("y").cast("long")).as("id"))
+    val nbrIds = batch.select(explode(array(col("id") + 1L, col("id") - 1L,
+      col("id") + IdShift, col("id") - IdShift)).as("id"))
+    val existIds = exist.filter(col("cluster_id").isNotNull)
+      .select(packId(col("x"), col("y")).as("id"), col("cluster_id"))
+    val adjacent = existIds.join(broadcast(nbrIds), Seq("id"), "left_semi")
+      .select(lit(1), col("id"), col("cluster_id")).as[Tagged]
+    val partialMax = existIds.select(col("cluster_id")).as[Long].mapPartitions { it =>
+      if (it.hasNext) Iterator[Tagged]((2, 0L, it.max)) else Iterator.empty
+    }
+    batch.select(lit(0), col("id"), lit(0L)).as[Tagged]
+      .union(adjacent).union(partialMax)
+      .coalesce(1)
+      .mapPartitions { rows =>
+        val ids = new java.util.HashSet[Long]()
+        val adj = new java.util.HashMap[Long, Long]()
+        var maxId: Option[Long] = None
+        rows.foreach {
+          case (0, id, _) => ids.add(id)
+          case (1, id, eid) => adj.put(id, math.min(eid, adj.getOrDefault(id, eid)))
+          case (_, _, m) => maxId = Some(maxId.fold(m)(math.max(_, m)))
+        }
+        val root = unionFind4(ids)
+        val label = new java.util.HashMap[Long, Long]()
+        ids.forEach { id =>
+          val r = root(id)
+          Iterator(id + 1L, id - 1L, id + IdShift, id - IdShift).foreach { n =>
+            if (adj.containsKey(n))
+              label.put(r, math.min(adj.get(n), label.getOrDefault(r, Long.MaxValue)))
+          }
+        }
+        val fresh = new java.util.TreeSet[Long]()
+        ids.forEach { id => val r = root(id); if (!label.containsKey(r)) fresh.add(r) }
+        var next = maxId.getOrElse(0L)
+        fresh.forEach { r => next += 1L; label.put(r, next) }
+        val out = Iterator.newBuilder[(Long, Long, Long)]
+        ids.forEach(id => out += ((id / IdShift, id % IdShift, label.get(root(id)))))
+        out.result()
+      }
+      .toDF("x", "y", "cluster_id")
+  }
+
+  /** The distributed plan of [[incrementalClusters]], for batches above
+    * [[SmallLoopMax]] or a forced `df`/`rdd` engine.
+    */
+  private def incrementalPlan(exist: DataFrame, newCells: DataFrame): DataFrame = {
     val newCc = connectedComponents4(newCells).withColumnRenamed("cluster_id", "tmp")
     val nbrs = newCc.select(col("tmp"),
       explode(array(
@@ -399,8 +499,6 @@ object Clustering {
         struct(col("x").as("x"), (col("y") + 1).as("y")),
         struct(col("x").as("x"), (col("y") - 1).as("y")))).as("n"))
       .select(col("tmp"), col("n.x").as("x"), col("n.y").as("y"))
-    val exist = existing.select(col("x").cast("long").as("x"),
-      col("y").cast("long").as("y"), col("cluster_id").cast("long").as("cluster_id"))
     val adopt = nbrs.join(exist.withColumnRenamed("cluster_id", "eid"), Seq("x", "y"))
       .groupBy("tmp").agg(min("eid").as("adopt_id"))
     val fresh = newCc.select("tmp").distinct()
@@ -409,13 +507,11 @@ object Clustering {
         dense_rank().over(org.apache.spark.sql.expressions.Window.orderBy("tmp"))
           .cast("long"))
     val maxId = exist.agg(coalesce(max("cluster_id"), lit(0L)).as("max_id"))
-    val labeledNew = newCc
+    newCc
       .join(adopt, Seq("tmp"), "left")
       .join(fresh, Seq("tmp"), "left")
       .crossJoin(broadcast(maxId))
       .select(col("x"), col("y"),
         coalesce(col("adopt_id"), col("max_id") + col("rk")).as("cluster_id"))
-    exist.withColumn("batch", lit(1))
-      .unionByName(labeledNew.withColumn("batch", lit(2)))
   }
 }

@@ -60,6 +60,19 @@ class ForcedEngineGateSpec extends SparkTestBase {
     }
   }
 
+  test("incrementalClusters: a forced engine runs no gate count") {
+    import spark.implicits._
+    val existing = Seq((0L, 0L, 1L), (9L, 9L, 2L)).toDF("x", "y", "cluster_id")
+    val cells = Seq((0L, 1L), (5L, 5L)).toDF("x", "y")
+    def run(): Unit = Clustering.incrementalClusters(existing, cells).collect(): Unit
+    val gated = actionSites(run())
+    assert(gateCounts(gated, "Clustering.scala").nonEmpty, s"gate probe sees no count: $gated")
+    Seq("local", "df").foreach { impl =>
+      val forced = withConf("graft.cc.impl", impl)(actionSites(run()))
+      assert(gateCounts(forced, "Clustering.scala").isEmpty, s"impl=$impl ran $forced")
+    }
+  }
+
   test("c108 graph-ann: a forced beam engine runs no gate count") {
     // first call builds the memoized inputs, so the probes below see
     // only c108's own jobs

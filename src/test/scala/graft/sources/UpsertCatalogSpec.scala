@@ -234,6 +234,46 @@ class UpsertCatalogSpec extends SparkTestBase {
     assert(r.size == 16 && r.filterNot(p => p._1 == ka || p._1 == kb).values.forall(_ == 0L))
   }
 
+  /** Statistics of the table's scan leaf in a freshly planned read. */
+  private def scanStats(table: String) =
+    spark.table(table).queryExecution.optimizedPlan.collectLeaves().head.stats
+
+  test("scans report exact statistics; a read planned after a MERGE sees the new count") {
+    spark.sql("DROP TABLE IF EXISTS graft.spec_st1")
+    spark.sql("CREATE TABLE graft.spec_st1 (k BIGINT, n BIGINT)")
+    assert(scanStats("graft.spec_st1").rowCount.contains(BigInt(0)))
+    spark.sql("INSERT INTO graft.spec_st1 VALUES (1, 1), (2, 2), (3, 3)")
+    val st = scanStats("graft.spec_st1")
+    // a two-BIGINT UnsafeRow is 24 bytes: the null bitset word + 2 × 8
+    assert(st.rowCount.contains(BigInt(3)) && st.sizeInBytes == BigInt(3 * 24), s"$st")
+    import spark.implicits._
+    Seq((3L, 30L), (4L, 40L), (5L, 50L)).toDF("k", "n").createOrReplaceTempView("spec_st1_up")
+    spark.sql(
+      """MERGE INTO graft.spec_st1 t USING spec_st1_up u ON t.k = u.k
+        |WHEN MATCHED THEN UPDATE SET n = u.n
+        |WHEN NOT MATCHED THEN INSERT (k, n) VALUES (u.k, u.n)""".stripMargin)
+    val after = scanStats("graft.spec_st1")
+    assert(after.rowCount.contains(BigInt(5)) && after.sizeInBytes == BigInt(5 * 24), s"$after")
+  }
+
+  test("an insert-only MERGE into a small table plans no SortMergeJoin") {
+    spark.sql("DROP TABLE IF EXISTS graft.spec_st2")
+    spark.sql("CREATE TABLE graft.spec_st2 (x BIGINT, y BIGINT, v DOUBLE)")
+    spark.range(0, 2000).selectExpr("id % 100 AS x", "id div 100 AS y", "0.5 AS v")
+      .writeTo("graft.spec_st2").append()
+    spark.range(1900, 2100).selectExpr("id % 100 AS x", "id div 100 AS y", "1.5 AS v")
+      .createOrReplaceTempView("spec_st2_up")
+    val merge = spark.sql(
+      """MERGE INTO graft.spec_st2 t USING spec_st2_up u ON t.x = u.x AND t.y = u.y
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    // the AQE plan string holds the initial plan too, so a sort-merge
+    // join that AQE only later turned into a broadcast still shows
+    val plan = merge.queryExecution.executedPlan.toString
+    assert(!plan.contains("SortMergeJoin"), plan)
+    val agg = spark.table("graft.spec_st2").agg(count(lit(1)), sum("v")).head
+    assert(agg.getLong(0) == 2100L && agg.getDouble(1) == 2000 * 0.5 + 100 * 1.5)
+  }
+
   test("DELETE FROM and UPDATE route through the row-level ops in both modes") {
     for ((table, props) <- Seq(
         ("graft.spec_u1", ""),

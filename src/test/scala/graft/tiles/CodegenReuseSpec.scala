@@ -1,7 +1,5 @@
 package graft.tiles
 
-import scala.collection.mutable
-
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -12,11 +10,11 @@ import graft.SparkTestBase
   * batches of [[Clustering.incrementalClusters]] hit the codegen cache
   * even when more than 100 unrelated shapes were compiled in between
   * (Spark's default cache holds 100 entries), and the labels follow
-  * the documented adoption rule.
+  * the documented adoption rule ([[AdoptionReplay]]).
   */
 class CodegenReuseSpec extends SparkTestBase {
 
-  private type Cell = (Long, Long)
+  import AdoptionReplay.{Cell, adopt}
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -28,39 +26,6 @@ class CodegenReuseSpec extends SparkTestBase {
       y <- 0L until 24L
       if rnd.nextDouble() < 0.45
     } yield (x, y)
-  }
-
-  private def nbrs(c: Cell): Seq[Cell] =
-    Seq((c._1 + 1, c._2), (c._1 - 1, c._2), (c._1, c._2 + 1), (c._1, c._2 - 1))
-
-  /** The adoption rule of [[Clustering.incrementalClusters]], replayed
-    * with a plain flood fill: a new component takes the smallest
-    * 4-adjacent existing id, else max existing id + its rank by min
-    * packed id among the components that adopt nothing. */
-  private def adopt(existing: Map[Cell, Long], cells: Seq[Cell]): Map[Cell, Long] = {
-    val live = cells.toSet
-    val tmp = mutable.Map.empty[Cell, Long]
-    cells.foreach { c0 =>
-      if (!tmp.contains(c0)) {
-        val comp = mutable.ArrayBuffer(c0)
-        val seen = mutable.Set(c0)
-        var i = 0
-        while (i < comp.size) {
-          nbrs(comp(i)).filter(n => live(n) && seen.add(n)).foreach(comp += _)
-          i += 1
-        }
-        val id = comp.map(c => c._1 * Clustering.IdShift + c._2).min
-        comp.foreach(tmp(_) = id)
-      }
-    }
-    val members = tmp.toSeq.groupMap(_._2)(_._1)
-    val adopted = members.flatMap { case (t, cs) =>
-      cs.flatMap(nbrs).flatMap(existing.get).minOption.map(t -> _)
-    }
-    val maxId = existing.values.maxOption.getOrElse(0L)
-    val fresh = members.keys.filterNot(adopted.contains).toSeq.sorted
-      .zipWithIndex.map { case (t, i) => t -> (maxId + i + 1) }.toMap
-    existing ++ tmp.map { case (c, t) => c -> adopted.getOrElse(t, fresh(t)) }
   }
 
   /** `n` compiled shapes that share nothing with the batch: one stage
