@@ -228,10 +228,6 @@ object DedupQueries {
       cross.unionByName(intra)
     })
 
-  /** Dev-profiling access to [[candidatePairsFor]]. */
-  private[dedup] def candidatePairsForProfile(docs: DataFrame): DataFrame =
-    candidatePairsFor(docs)
-
   /** Frame-level candidate generation for the ScaleSmoke 10x pins —
     * same body the memoized session path runs.
     */

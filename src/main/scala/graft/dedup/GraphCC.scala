@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.tiles.Clustering.{MinUnionFind, engine, lblSum}
 import graft.util.Seal._
 
 /** Generic min-label connected components over an arbitrary undirected
@@ -10,7 +11,7 @@ import graft.util.Seal._
   * [[graft.tiles.Clustering]] loop, used to collapse near-duplicate
   * document pairs into canonical clusters (C19).
   *
-  * Size-dispatched hybrid, same rationale as `Clustering`'s rdd/df
+  * Size-dispatched hybrid, same rationale as `Clustering`'s local/df
   * split (`graft.gcc.impl` forces `local` or `df`):
   *  - small edge lists are LATENCY-bound: the distributed fixpoint pays
   *    3 jobs × shuffle scheduling per round for ~log4(diameter) rounds
@@ -24,9 +25,11 @@ import graft.util.Seal._
   *    log4(component diameter). Per-round traffic is O(|E| + |V|); at
   *    100 TB both shuffle keys (vertex id) are high-cardinality and
   *    skew-free after the LSH supernode stage has already collapsed
-  *    exact-duplicate groups. Lineage truncated per round with a lazy
-  *    localCheckpoint materialized by the convergence sum; the sum runs
-  *    in DECIMAL(38,0) so packed/large ids can't overflow under ANSI.
+  *    exact-duplicate groups. Lineage is truncated per round through
+  *    [[graft.util.Seal]] (executor-local blocks by default, durable
+  *    checkpoints under `graft.seal.durable=true`), the last seal lazy
+  *    and materialized by the convergence sum, which runs in
+  *    DECIMAL(38,0) so packed/large ids can't overflow under ANSI.
   */
 object GraphCC {
 
@@ -42,95 +45,52 @@ object GraphCC {
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
       maxIter: Int = 40): DataFrame = {
-    val spark = vertices.sparkSession
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    def stamp(what: String): Unit =
-      if (debug) System.err.println(s"[gcc] $what t=${System.nanoTime() / 1e9}")
-    stamp("start")
-    // The input is sealed FIRST — downstream consumers (either engine)
-    // would otherwise re-evaluate the (possibly expensive) edge
-    // derivation subtree per job.
-    val e0 = edges.select(col("src").cast("long").as("src"),
+    // The input is sealed before either engine reads it — they would
+    // otherwise re-evaluate the (possibly expensive) edge derivation
+    // subtree per job. Lazy, so a rejected engine name runs no job.
+    lazy val e0 = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).seal()
-    val nE = e0.count()
-    stamp(s"edges sealed nE=$nE")
-    val impl = spark.conf.getOption("graft.gcc.impl")
-      .getOrElse(if (nE <= SmallGraphMax) "local" else "df")
-    val r = if (impl == "local") ccLocal(vertices, e0, stamp)
-      else ccDf(vertices, e0, maxIter, stamp)
-    stamp("done")
-    r
+    engine(vertices.sparkSession, "graft.gcc.impl", e0.count(), SmallGraphMax) match {
+      case "local" => ccLocal(vertices, e0)
+      case _ => ccDf(vertices, e0, maxIter)
+    }
   }
 
   /** Single-task union-find for small edge lists (see class doc): one
-    * `mapPartitions` over the coalesced edges builds parent pointers
-    * with path compression, unioning by MIN so every root is its
+    * `mapPartitions` over the coalesced edges feeds a
+    * [[graft.tiles.Clustering.MinUnionFind]], so every root is its
     * component's smallest id; singleton vertices come back via the left
     * join (no edge row → label = own id). Runs on an executor, not the
     * driver — no collect.
     */
-  private def ccLocal(vertices: DataFrame, e0: DataFrame,
-      stamp: String => Unit): DataFrame = {
+  private def ccLocal(vertices: DataFrame, e0: DataFrame): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
     val touched = e0.as[(Long, Long)].coalesce(1).mapPartitions { it =>
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrDefault(x, x)
-        while (p != x) {
-          val gp = parent.getOrDefault(p, p)
-          parent.put(x, gp)
-          x = p
-          p = gp
-        }
-        x
-      }
+      val uf = new MinUnionFind
       val ids = new java.util.HashSet[Long]()
       it.foreach { case (s, d) =>
         ids.add(s)
         ids.add(d)
-        val rs = find(s)
-        val rd = find(d)
-        if (rs < rd) parent.put(rd, rs)
-        else if (rd < rs) parent.put(rs, rd)
+        uf.union(s, d)
       }
       val out = Iterator.newBuilder[(Long, Long)]
-      ids.forEach(id => out += ((id, find(id))))
+      ids.forEach(id => out += ((id, uf.find(id))))
       out.result()
     }.toDF("id", "lbl")
-    val labeled = vertices.select(col("id")).distinct()
+    vertices.select(col("id")).distinct()
       .join(touched, Seq("id"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster_id"))
-    stamp("local union-find labeled")
-    labeled
   }
 
-  /** Per-round lineage truncation: executor-local blocks by default
-    * (fast), or a durable `checkpoint` under `graft.gcc.durable=true`
-    * (requires `SparkContext.setCheckpointDir`) so a long cluster run
-    * survives executor loss — same trade Clustering's RDD loop offers
-    * via `graft.cc.durable`.
-    */
-  private def truncate(df: DataFrame, eager: Boolean): DataFrame =
-    if (df.sparkSession.conf.getOption("graft.gcc.durable").contains("true"))
-      df.checkpoint(eager)
-    else df.localCheckpoint(eager)
-
   /** DataFrame pointer-jumping fixpoint for large graphs (class doc). */
-  private def ccDf(vertices: DataFrame, e0: DataFrame, maxIter: Int,
-      stamp: String => Unit): DataFrame = {
-    val und = truncate(e0
+  private def ccDf(vertices: DataFrame, e0: DataFrame, maxIter: Int): DataFrame = {
+    val und = e0
       .union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
-      .distinct(), eager = true)
-    stamp("edges materialized")
-    var labels = truncate(vertices.select(col("id")).distinct()
-      .withColumn("lbl", col("id")), eager = true)
-    stamp("labels")
-    def lblSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
+      .distinct().seal()
+    var labels = vertices.select(col("id")).distinct()
+      .withColumn("lbl", col("id")).seal()
     var prevSum = lblSum(labels)
     var iter = 0
     var done = false
@@ -146,21 +106,20 @@ object GraphCC {
         .join(labels.select(col("id").as("src"), col("lbl").as("mlbl")), "src")
         .groupBy("dst").agg(min("mlbl").as("mlbl"))
         .withColumnRenamed("dst", "id")
-      val nmin = truncate(labels.join(msgs, Seq("id"), "left")
-        .select(col("id"), least(col("lbl"), coalesce(col("mlbl"), col("lbl"))).as("lbl")),
-        eager = true)
+      val nmin = labels.join(msgs, Seq("id"), "left")
+        .select(col("id"), least(col("lbl"), coalesce(col("mlbl"), col("lbl"))).as("lbl"))
+        .seal()
       val parents = nmin.select(col("id").as("pid"), col("lbl").as("plbl"))
       def jump(df: DataFrame, tag: String): DataFrame =
         df.as("l").join(parents.as(tag), col("l.lbl") === col(s"$tag.pid"), "left")
           .select(col("l.id").as("id"),
             least(col("l.lbl"), coalesce(col(s"$tag.plbl"), col("l.lbl"))).as("lbl"))
-      val next = truncate(jump(jump(nmin, "p1"), "p2"), eager = false)
+      val next = jump(jump(nmin, "p1"), "p2").seal(eager = false)
       val s = lblSum(next)
       done = s.compareTo(prevSum) == 0
       prevSum = s
       labels = next
       iter += 1
-      stamp(s"round $iter done=$done")
     }
     labels.withColumnRenamed("lbl", "cluster_id")
   }

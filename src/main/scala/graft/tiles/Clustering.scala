@@ -1,48 +1,37 @@
 package graft.tiles
 
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.util.Seal._
 
 /** Connected components of positive tiles under 4-neighbor adjacency —
   * the reference's cluster detection (run_inference.py:21-60), which is a
-  * driver-recursive DFS there, re-expressed as distributed pointer-jumping
-  * label propagation.
+  * driver-recursive DFS there.
   *
-  * Each round does two steps:
-  *   1. neighbor-min: label(c) ← min(label over c and its 4 neighbors);
-  *   2. pointer jump ×2: label(c) ← label(label(c)) — propagation
-  *      distance grows ~4× per round, so rounds ≈ log4(diameter).
-  * Neighbor-min alone needs diameter-many rounds (a solar-farm blob at
-  * z21 can span thousands of tiles); jumping makes the loop logarithmic.
+  * Two engines compute the same labeling (component label = min packed
+  * id); the measured cell count picks one (see [[connectedComponents4]]):
+  *  - `local`: small sets are LATENCY-bound — any per-round job
+  *    scheduling dwarfs the compute — so ONE task runs a union-find and
+  *    closes them with no per-round jobs;
+  *  - `df`: large sets are THROUGHPUT-bound, so a DataFrame
+  *    pointer-jumping loop runs on Tungsten rows (whole-stage codegen,
+  *    off-heap shuffle). Each round does neighbor-min (label(c) ← min
+  *    over c and its 4 neighbors), then two pointer jumps (label(c) ←
+  *    label(label(c))): propagation distance grows ~4× per round, so
+  *    rounds ≈ log4(diameter), where neighbor-min alone would need
+  *    diameter-many rounds (a solar-farm blob at z21 can span thousands
+  *    of tiles). On a 2M-cell serpentine its rounds measured ~10×
+  *    cheaper than an RDD loop's co-partitioned narrow joins (boxed
+  *    Tuple2 shuffles and cogroup hash maps), so no RDD engine is kept.
   *
-  * The loop body is the ONE deliberately RDD-shaped piece of this engine
-  * (the carve-out SURVEY.md §6 reserves for genuinely iterative
-  * fixpoints, the same reason GraphX is RDD-based): a DataFrame fixpoint
-  * re-plans, re-codegens, and — crucially — re-SHUFFLES both sides of
-  * every join on every round, because Catalyst cannot know two frames
-  * share a partitioning across queries. Here the label RDD is hash-
-  * partitioned by packed cell id ONCE; the membership filter and the
-  * parent lookups are then narrow co-partitioned joins, so each round
-  * moves only the neighbor messages and the (tiny) jump relinks. Lineage
-  * is truncated every round (localCheckpoint on the persisted blocks);
-  * convergence is the label-sum fixpoint, computed in the same action
-  * that materializes the round.
-  *
-  * At 100 TB the same loop holds: the partition count scales with the
-  * positive-cell count (`graft.cc.partitions` overrides), per-round
-  * traffic is O(|positive cells|), never the full tile fact, and every
-  * key (cell id, label id) is high-cardinality. localCheckpoint stores
-  * blocks on executors — an executor loss on a long cluster run costs a
-  * recompute from the last materialization; set a durable
-  * `SparkContext.setCheckpointDir` and `graft.cc.durable=true` to trade
-  * latency for fault tolerance.
+  * At 100 TB the df loop holds: per-round traffic is O(|positive
+  * cells|), never the full tile fact, and every key (cell id, label id)
+  * is high-cardinality. Lineage is truncated every round through
+  * [[graft.util.Seal]]: executor-local blocks by default, durable
+  * checkpoints under `graft.seal.durable=true`, so a long cluster run
+  * can survive executor loss.
   */
 object Clustering {
 
@@ -67,51 +56,42 @@ object Clustering {
     * (x, y, cluster_id) where cluster_id = min (x*2^32+y) over the
     * component.
     *
-    * Three interchangeable engines, picked by the measured input size
-    * (`graft.cc.impl` forces `local`, `rdd`, or `df`):
-    *  - small labeled sets are LATENCY-bound — ANY per-round scheduling
-    *    dwarfs the compute — so one `mapPartitions` union-find task
-    *    closes them with zero per-round jobs (adjacency stays implicit:
-    *    each id unions with id+1 / id+2^32 when present, so no edge
-    *    list is ever materialized);
-    *  - the RDD micro-loop (narrow co-partitioned joins, no
-    *    re-planning) remains selectable as the middle ground;
-    *  - large sets are THROUGHPUT-bound — boxed Tuple2 shuffles and
-    *    cogroup hash maps lose to Tungsten's off-heap rows by an order
-    *    of magnitude — so the DataFrame loop takes over (measured on a
-    *    2M-cell serpentine: DF rounds are ~10× cheaper than RDD rounds).
-    * All run identical label algebra (component label = min packed id)
-    * and yield identical labels. The size count runs only where it is
-    * used: for the gate, or to size the `rdd` loop's partitions.
+    * Up to [[SmallLoopMax]] distinct cells take the `local` engine: one
+    * `mapPartitions` union-find task, adjacency implicit (each id unions
+    * with id+1 / id+2^32 when present, so no edge list is ever
+    * materialized). Larger sets take the `df` loop (class doc).
+    * `graft.cc.impl` forces either engine; the size count then never
+    * runs.
     */
   def connectedComponents4(cells: DataFrame, maxIter: Int = 60): DataFrame = {
-    val spark = cells.sparkSession
-    val keys = cells.select(col("x").cast("long").as("x"), col("y").cast("long").as("y"))
+    lazy val keys = cells.select(col("x").cast("long").as("x"), col("y").cast("long").as("y"))
       .distinct().seal()
-    lazy val n = keys.count()
-    engine(spark, n) match {
+    engine(cells.sparkSession, "graft.cc.impl", keys.count(), SmallLoopMax) match {
       case "local" => ccLocal(keys)
-      case "rdd" => ccRdd(keys, n, maxIter)
       case _ => ccDf(keys, maxIter)
     }
   }
 
-  /** The size gate of [[connectedComponents4]] and
-    * [[incrementalClusters]]: `graft.cc.impl` forces an engine, otherwise
-    * up to [[SmallLoopMax]] cells take the single-task union-find. `n`
-    * is evaluated only when no engine is forced.
+  /** The size gate of both CC modules: the engine the session conf
+    * `key` forces, else `local` up to `max` items, else `df`. `n` is
+    * evaluated only when no engine is forced. The conf comes from
+    * outside the program, so a value other than `local` or `df` is
+    * rejected before any job runs instead of silently running `df`.
     */
-  private def engine(spark: SparkSession, n: => Long): String =
-    spark.conf.getOption("graft.cc.impl").getOrElse(if (n <= SmallLoopMax) "local" else "df")
+  private[graft] def engine(spark: SparkSession, key: String, n: => Long, max: Long): String =
+    spark.conf.getOption(key) match {
+      case Some(v @ ("local" | "df")) => v
+      case Some(v) => throw new IllegalArgumentException(s"$key=$v: expected local|df")
+      case None => if (n <= max) "local" else "df"
+    }
 
-  /** Union-find over a set of packed ids under 4-adjacency: each id
-    * unions with its +x/+y neighbors when present (the −x/−y directions
-    * are those same unions seen from the other side), by MIN, so a
-    * component's root IS its smallest packed id. Returns the
-    * path-compressing root lookup.
+  /** Path-compressing union-find over long ids, unioning by MIN so a
+    * component's root IS its smallest id — the single-task kernel of
+    * both CC modules (the grid here, the edge list in
+    * [[graft.dedup.GraphCC]]). Built inside a task, never shipped.
     */
-  private def unionFind4(ids: java.util.HashSet[Long]): Long => Long = {
-    val parent = new java.util.HashMap[Long, Long]()
+  private[graft] final class MinUnionFind {
+    private val parent = new java.util.HashMap[Long, Long]()
     def find(x0: Long): Long = {
       var x = x0
       var p = parent.getOrDefault(x, x)
@@ -129,14 +109,33 @@ object Clustering {
       if (ra < rb) parent.put(rb, ra)
       else if (rb < ra) parent.put(ra, rb)
     }
+  }
+
+  /** [[MinUnionFind]] over a set of packed ids under 4-adjacency: each
+    * id unions with its +x/+y neighbors when present (the −x/−y
+    * directions are those same unions seen from the other side).
+    * Returns the root lookup.
+    */
+  private def unionFind4(ids: java.util.HashSet[Long]): Long => Long = {
+    val uf = new MinUnionFind
     ids.forEach { id =>
       // y+1 stays inside the same x-row iff y+1 < 2^32 (contract:
       // 0 ≤ y < 2^31, so id+1 can't alias the next row's y=0)
-      if (ids.contains(id + 1L)) union(id, id + 1L)
-      if (ids.contains(id + IdShift)) union(id, id + IdShift)
+      if (ids.contains(id + 1L)) uf.union(id, id + 1L)
+      if (ids.contains(id + IdShift)) uf.union(id, id + IdShift)
     }
-    find
+    uf.find
   }
+
+  /** Convergence metric of both CC modules' DataFrame loops: the sum of
+    * `lbl` in DECIMAL(38,0), exact and overflow-free to ~1e19 labels. A
+    * LongType sum of 2^32-packed ids would exceed 2^63 — and THROW under
+    * ANSI mode (the Spark 4 default) — on any realistic real-zoom input
+    * of the very sizes those loops are selected for.
+    */
+  private[graft] def lblSum(df: DataFrame): java.math.BigDecimal =
+    df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
+      lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
 
   /** Single-task union-find for small cell sets (see
     * [[connectedComponents4]]): one `mapPartitions` task builds the id
@@ -159,106 +158,11 @@ object Clustering {
       .toDF("x", "y", "cluster_id")
   }
 
-  /** RDD micro-loop for small label sets (see [[connectedComponents4]]). */
-  private def ccRdd(keys: DataFrame, n: Long, maxIter: Int): DataFrame = {
-    val spark = keys.sparkSession
-    val sc = spark.sparkContext
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    def stamp(what: String): Unit =
-      if (debug) System.err.println(s"[cc] $what t=${System.nanoTime() / 1e9}")
-    val durable = spark.conf.getOption("graft.cc.durable").contains("true")
-    def truncate[T](rdd: RDD[T]): RDD[T] =
-      if (durable) { rdd.checkpoint(); rdd } else rdd.localCheckpoint()
-
-    // Partition count scales with the labeled set (~100k ids/partition),
-    // capped by the cluster's parallelism; the same partitioner is
-    // reused every round so all id-keyed joins are narrow.
-    val numParts = spark.conf.getOption("graft.cc.partitions").map(_.toInt).getOrElse(
-      math.max(1L, math.min(sc.defaultParallelism.toLong, n / 100000L + 1L)).toInt)
-    val part = new HashPartitioner(numParts)
-    var labels: RDD[(Long, Long)] = truncate(
-      keys.rdd.map(r => r.getLong(0) * IdShift + r.getLong(1))
-        .map(id => (id, id))
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    // Convergence metric: the label sum as an overflow-free (hi, lo)
-    // pair — hi = Σ(lbl >> 32) ≤ 2^31·n, lo = Σ(lbl & 0xffffffff) <
-    // 2^32·n, so neither half wraps for any n < 2^31 and pair equality
-    // ⇔ true-sum equality (a plain Long sum of 2^32-packed labels wraps
-    // — or throws under ANSI — already at millions of real-zoom cells).
-    def lblSum(rdd: RDD[(Long, Long)]): (Long, Long) =
-      rdd.map(_._2).aggregate((0L, 0L))(
-        (acc, l) => (acc._1 + (l >>> 32), acc._2 + (l & 0xffffffffL)),
-        (a, b) => (a._1 + b._1, a._2 + b._2))
-    var prevSum = lblSum(labels)
-    stamp(s"sum0 parts=$numParts")
-
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      // 1. neighbor-min: each cell messages its label to itself and its 4
-      // neighbors; reduceByKey(min) lands on `part`, and the narrow join
-      // against the live label set drops phantom ids (messages aimed at
-      // non-cells; y±1 under/overflow packs to an id outside the 0 ≤ y <
-      // 2^31 contract, so it can never alias a real cell).
-      val nmin = labels
-        .flatMap { case (id, lbl) =>
-          Iterator((id, lbl), (id + 1L, lbl), (id - 1L, lbl),
-            (id + IdShift, lbl), (id - IdShift, lbl))
-        }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        .join(labels) // same partitioner → narrow
-        .mapValues { case (m, old) => math.min(m, old): Long }
-      // 2. pointer jump ×2: re-key by label (one small shuffle), look the
-      // label's own label up in the co-partitioned parent table, re-key
-      // back. Labels are always live cell ids, so the lookup resolves.
-      def jump(cur: RDD[(Long, Long)]): RDD[(Long, Long)] =
-        cur.map { case (id, lbl) => (lbl, id) }
-          .partitionBy(part)
-          .join(cur) // (lbl, (id, parentLbl)) — narrow vs cur
-          .map { case (lbl, (id, plbl)) => (id, math.min(lbl, plbl)) }
-          .partitionBy(part)
-      val nminP = nmin.persist(StorageLevel.MEMORY_AND_DISK)
-      val next = truncate(jump(jump(nminP)).persist(StorageLevel.MEMORY_AND_DISK))
-      val s = lblSum(next) // materializes the round
-      nminP.unpersist(blocking = false)
-      labels.unpersist(blocking = false)
-      done = s == prevSum
-      prevSum = s
-      labels = next
-      iter += 1
-      stamp(s"round $iter sum=$s done=$done")
-    }
-    val rows = labels.map { case (id, lbl) => Row(id / IdShift, id % IdShift, lbl) }
-    spark.createDataFrame(rows, StructType(Seq(
-      StructField("x", LongType, nullable = false),
-      StructField("y", LongType, nullable = false),
-      StructField("cluster_id", LongType, nullable = false))))
-  }
-
-  /** Tungsten loop for large label sets (see [[connectedComponents4]]):
-    * same algebra as [[ccRdd]] in DataFrame form — whole-stage codegen
-    * and off-heap shuffle, at the cost of per-round re-planning (cheap
-    * relative to the data at this size). One job per round: the lazy
-    * localCheckpoint is materialized by the convergence sum.
+  /** Tungsten loop for large label sets (class doc). One job per round:
+    * the lazy per-round seal is materialized by the convergence sum.
     */
   private def ccDf(keys: DataFrame, maxIter: Int): DataFrame = {
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    // same durable/local trade the RDD loop offers: graft.cc.durable=true
-    // (+ SparkContext.setCheckpointDir) survives executor loss
-    def truncate(df: DataFrame, eager: Boolean): DataFrame =
-      if (df.sparkSession.conf.getOption("graft.cc.durable").contains("true"))
-        df.checkpoint(eager)
-      else df.localCheckpoint(eager)
-    var labels = truncate(keys.withColumn("lbl", packId(col("x"), col("y"))),
-      eager = true)
-    // DECIMAL(38,0) sum: exact and overflow-free to ~1e19 labels. A
-    // LongType sum of 2^32-packed ids would exceed 2^63 — and THROW
-    // under ANSI mode (the Spark 4 default) — on any realistic
-    // real-zoom input of the very sizes this path is selected for.
-    def lblSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
+    var labels = keys.withColumn("lbl", packId(col("x"), col("y"))).seal()
     var prevSum = lblSum(labels)
     var iter = 0
     var done = false
@@ -282,14 +186,12 @@ object Clustering {
         df.as("l").join(parents.as(tag), col("l.lbl") === col(s"$tag.pid"), "left")
           .select(col("l.x").as("x"), col("l.y").as("y"), col("l.id").as("id"),
             least(col("l.lbl"), coalesce(col(s"$tag.plbl"), col("l.lbl"))).as("lbl"))
-      val next = truncate(jump(jump(ids, "p1"), "p2").drop("id"), eager = false)
+      val next = jump(jump(ids, "p1"), "p2").drop("id").seal(eager = false)
       val s = lblSum(next)
       done = s.compareTo(prevSum) == 0
       prevSum = s
       labels = next
       iter += 1
-      if (debug)
-        System.err.println(s"[cc-df] round $iter sum=$s done=$done t=${System.nanoTime() / 1e9}")
     }
     labels.withColumnRenamed("lbl", "cluster_id")
   }
@@ -408,7 +310,7 @@ object Clustering {
     * and the job count does not grow with |existing|; the one task's
     * scan of `existing` is serial, which at batch-loop sizes (~100k
     * labels) costs less than the jobs it replaces. Above
-    * [[SmallLoopMax]] batch cells, or with `graft.cc.impl=df|rdd`, the
+    * [[SmallLoopMax]] batch cells, or with `graft.cc.impl=df`, the
     * distributed plan runs instead ([[incrementalPlan]]): one CC
     * fixpoint over the new batch, one explode×4 equi-join against
     * `existing` for adjacency (O(4·|new|) shuffle rows, never
@@ -421,7 +323,8 @@ object Clustering {
   def incrementalClusters(existing: DataFrame, newCells: DataFrame): DataFrame = {
     val exist = existing.select(col("x").cast("long").as("x"),
       col("y").cast("long").as("y"), col("cluster_id").cast("long").as("cluster_id"))
-    val labeledNew = engine(existing.sparkSession, newCells.count()) match {
+    val labeledNew = engine(existing.sparkSession, "graft.cc.impl", newCells.count(),
+        SmallLoopMax) match {
       case "local" => incrementalLocal(exist, newCells)
       case _ => incrementalPlan(exist, newCells)
     }
@@ -488,7 +391,7 @@ object Clustering {
   }
 
   /** The distributed plan of [[incrementalClusters]], for batches above
-    * [[SmallLoopMax]] or a forced `df`/`rdd` engine.
+    * [[SmallLoopMax]] or a forced `df` engine.
     */
   private def incrementalPlan(exist: DataFrame, newCells: DataFrame): DataFrame = {
     val newCc = connectedComponents4(newCells).withColumnRenamed("cluster_id", "tmp")

@@ -13,11 +13,12 @@ import org.apache.spark.storage.StorageLevel
   * memory/disk are an OOM and a lost-executor recompute storm, not a
   * cache, so `graft.seal.durable=true` swaps EVERY seal site to a
   * reliable `checkpoint` (HDFS/object-store files; survives executor
-  * loss, frees block-manager space). Same trade [[graft.dedup.GraphCC]]
-  * offers its iteration frames via `graft.gcc.durable` and the RDD CC
-  * loop via `graft.cc.durable` — this generalizes it to the sealed
-  * STORES (SURVEY §6). Results must be conf-invariant (spec-pinned):
-  * the hatch moves bytes, never values.
+  * loss, frees block-manager space). That covers the sealed STORES
+  * (SURVEY §6) and the per-round frames of both connected-components
+  * loops ([[graft.tiles.Clustering]], [[graft.dedup.GraphCC]]) alike:
+  * this is the one durability knob, and outside the scale-smoke
+  * fixtures the only place production code checkpoints. Results must
+  * be conf-invariant (spec-pinned): the hatch moves bytes, never values.
   *
   * `graft.seal.dir` (optional): checkpoint directory to install if the
   * context has none — a session conf so deployments need no code

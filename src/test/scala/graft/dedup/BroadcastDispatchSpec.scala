@@ -45,7 +45,7 @@ class BroadcastDispatchSpec extends SparkTestBase {
 
   test("candidate pairs: hints below the gate, plain equi-joins above, same rows") {
     val docs = diverseDocs(200).localCheckpoint(true)
-    val hinted = DedupQueries.candidatePairsForProfile(docs)
+    val hinted = DedupQueries.candidatePairsOn(docs)
     assert(hintCount(hinted) > 0,
       "dup-heavy fast path lost its broadcast hints below the gate")
     var rowsHinted: Seq[(Long, Long, Long)] = null
@@ -53,7 +53,7 @@ class BroadcastDispatchSpec extends SparkTestBase {
     rowsHinted = hinted.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
     withConfs("graft.dedup.maxBcastGroups" -> "0") {
-      val plain = DedupQueries.candidatePairsForProfile(docs)
+      val plain = DedupQueries.candidatePairsOn(docs)
       assert(hintCount(plain) == 0,
         "broadcast hint survived above the groups gate — driver OOM hazard at scale")
       rowsPlain = plain.collect()
@@ -74,7 +74,7 @@ class BroadcastDispatchSpec extends SparkTestBase {
       (i.toLong, s"alpha beta gamma delta tail${i % 4}")).toDF("doc_id", "text")
       .localCheckpoint(true)
     withConfs("graft.dedup.maxBcastGroups" -> "50") {
-      val df = DedupQueries.candidatePairsForProfile(docs)
+      val df = DedupQueries.candidatePairsOn(docs)
       assert(hintCount(df) > 0,
         "a doc-count upper bound withheld the broadcast hint on a dup-heavy corpus")
     }

@@ -212,9 +212,11 @@ class DedupQueriesSpec extends SparkTestBase {
     // durable-checkpoint df variant: same labels, lineage cut to disk
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-gcc-ckpt")
     spark.sparkContext.setCheckpointDir(ckptDir.toString)
-    spark.conf.set("graft.gcc.durable", "true")
+    spark.conf.set("graft.seal.durable", "true")
     try assert(local == run("df"))
-    finally spark.conf.unset("graft.gcc.durable")
+    finally spark.conf.unset("graft.seal.durable")
+    assert(java.nio.file.Files.walk(ckptDir).anyMatch(java.nio.file.Files.isRegularFile(_)),
+      "graft.seal.durable=true wrote no checkpoint files for the df loop")
   }
 
   test("c25 redaction: entity mentions counted and removed, lengths shrink accordingly") {

@@ -72,7 +72,7 @@ class ClusteringSpec extends SparkTestBase {
     assert(got((2097151L, 2097151L)) == 2097151L * Clustering.IdShift + 2097151L)
   }
 
-  test("local, rdd, and df engines produce identical labels") {
+  test("local and df engines produce identical labels") {
     val pos = GeoDerive.positives(spark, sf)
     def run(impl: String): Seq[(Long, Long, Long)] = {
       spark.conf.set("graft.cc.impl", impl)
@@ -81,15 +81,16 @@ class ClusteringSpec extends SparkTestBase {
       finally spark.conf.unset("graft.cc.impl")
     }
     val local = run("local")
-    val rdd = run("rdd")
     val df = run("df")
-    assert(local.nonEmpty && local == rdd && local == df)
+    assert(local.nonEmpty && local == df)
     // durable-checkpoint df variant: same labels, lineage cut to disk
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt")
     spark.sparkContext.setCheckpointDir(ckptDir.toString)
-    spark.conf.set("graft.cc.durable", "true")
+    spark.conf.set("graft.seal.durable", "true")
     try assert(local == run("df"))
-    finally spark.conf.unset("graft.cc.durable")
+    finally spark.conf.unset("graft.seal.durable")
+    assert(java.nio.file.Files.walk(ckptDir).anyMatch(java.nio.file.Files.isRegularFile(_)),
+      "graft.seal.durable=true wrote no checkpoint files for the df loop")
   }
 
   test("diagonal tiles are NOT connected (4-neighbor, run_inference.py:21)") {

@@ -83,15 +83,12 @@ class SealSpec extends SparkTestBase {
   }
 
   test("sweep: every sealed store in src/main routes through seal() or a named durable hatch") {
-    // The e039784 claim ("generalize the durable hatch to every sealed
-    // store") is enforced structurally: a raw .localCheckpoint( call in
+    // graft.seal.durable is the ONE durability knob, enforced
+    // structurally: a raw .localCheckpoint( or .checkpoint( call in
     // production code is allowed ONLY in (a) Seal.scala — the primitive
-    // itself, (b) ScaleSmoke.scala — synthetic fixture staging for the
-    // scale pins, never a production sealed store, or (c) a line inside
-    // a named durable hatch (graft.gcc.durable / graft.cc.durable),
-    // identified by the token `durable` on the call line or within the
-    // 4 lines above it. Anything else is a store the
-    // graft.seal.durable conf silently does not cover.
+    // itself, or (b) ScaleSmoke.scala — synthetic fixture staging for
+    // the scale pins, never a production sealed store. Anything else is
+    // a store or loop frame the knob silently does not cover.
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"expected to run from the repo root, cwd=${new java.io.File(".").getAbsolutePath}")
     def files(f: java.io.File): Seq[java.io.File] =
@@ -105,12 +102,10 @@ class SealSpec extends SparkTestBase {
         try src.getLines().toVector finally src.close()
       }
       (line, i) <- lines.zipWithIndex
-      if line.contains(".localCheckpoint(")
-      ctx = lines.slice(math.max(0, i - 4), i + 1)
-      if !ctx.exists(_.contains("durable"))
+      if line.contains(".localCheckpoint(") || line.contains(".checkpoint(")
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty,
-      "raw localCheckpoint sealed store(s) outside every durable hatch:\n" +
+      "raw checkpoint call(s) outside Seal.scala:\n" +
         offenders.mkString("\n"))
   }
 
