@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.sets.sorted_intersect_count
 import graft.text.TextQueries.{tokenHash, tokenHashSql, tokens}
+import graft.util.Dispatch
 import graft.util.Seal._
 
 /** SURVEY.md §2 block C6–C8: near-duplicate detection over `documents`.
@@ -62,47 +63,46 @@ object MinHashLsh {
 object DedupQueries {
   import MinHashLsh._
 
-  /** Size-dispatched broadcast hints for the LSH candidate/scoring path
-    * (the [[GraphCC.SmallGraphMax]] pattern applied to joins): an
+  /** Size-gated broadcast hints for the LSH candidate/scoring path (the
+    * [[GraphCC.SmallGraphMax]] pattern applied to joins): an
     * UNCONDITIONAL `broadcast()` here is the one 100×-scale landmine —
     * a diverse corpus has ~|docs| distinct signatures and set-reps, and
     * a hinted broadcast of a corpus-sized frame doesn't degrade, it
-    * OOMs the driver. Every gated frame descends from an
-    * already-sealed localCheckpoint, so the gate is one cheap count
-    * over cached blocks; above the gate the joins run as plain
-    * equi-joins and AQE still auto-broadcasts whenever the runtime
-    * build side fits its own threshold — the hint is an optimization
-    * for the dup-heavy regime, never a correctness lever.
+    * OOMs the driver. Above the gate the joins run as plain equi-joins
+    * and AQE still auto-broadcasts whenever the runtime build side fits
+    * its own threshold — the hint is an optimization for the dup-heavy
+    * regime, never a correctness lever.
     *
-    *  - [[MaxBcastGroups]] caps the supernode `groups` frame by its
-    *    upper bound |sigs| (narrow rows: doc_id + Bands hashes —
-    *    4M ≈ 100 MB build side);
-    *  - the set-rep frames carry per-doc sorted shingle-hash ARRAYS, so
-    *    row count is a poor proxy for build size: [[setsHint]] gates on
-    *    rows ≤ [[MaxBcastReps]] AND total array elements ≤
-    *    [[MaxBcastSetElems]] (32M longs ≈ 256 MB).
+    * Every hinted join passes one gate, [[bcastHint]]: one aggregate
+    * job over the (sealed, cheap to re-read) frame gives its rows and,
+    * for an array payload, its summed elements — row count alone is a
+    * poor proxy for an array frame's build size. The hint holds only
+    * when rows ≤ the caller's row cap ([[MaxBcastGroups]] for narrow
+    * class-keyed frames, 4M rows ≈ 100 MB; [[MaxBcastReps]] for the
+    * per-class array frames: shingle sets, signatures, token sets) AND
+    * elements ≤ [[MaxBcastSetElems]] (32M longs ≈ 256 MB).
     *
-    * Overridable via `graft.dedup.maxBcastGroups` /
-    * `graft.dedup.maxBcastReps` / `graft.dedup.maxBcastSetElems` so
+    * The three caps are the `graft.dedup.maxBcast*` session confs, so
     * specs pin the shuffle form at small SF.
     */
   val MaxBcastGroups = 4000000L
   val MaxBcastReps = 1000000L
   val MaxBcastSetElems = 32000000L
 
-  private def confLong(df: DataFrame, key: String, dflt: Long): Long =
-    df.sparkSession.conf.getOption(key).map(_.toLong).getOrElse(dflt)
+  private val GroupRows = ("graft.dedup.maxBcastGroups", MaxBcastGroups)
+  private val RepRows = ("graft.dedup.maxBcastReps", MaxBcastReps)
 
-  /** Count+bytes-gated hint for a sealed rep frame carrying the sorted
-    * distinct shingle-hash array column `s`. Returns the hint to apply
-    * to each projection of the frame's set columns.
+  /** The broadcast gate (dispatch doc above) over `df`, whose rows carry
+    * `elems` payload elements each (none: a narrow frame). Returns the
+    * hint for each projection of `df` that a join builds on.
     */
-  private def setsHint(reps: DataFrame): DataFrame => DataFrame = {
-    val a = reps.agg(count(lit(1)), sum(size(col("s")))).head()
-    val nRows = a.getLong(0)
-    val nElems = if (a.isNullAt(1)) 0L else a.getLong(1)
-    if (nRows <= confLong(reps, "graft.dedup.maxBcastReps", MaxBcastReps) &&
-        nElems <= confLong(reps, "graft.dedup.maxBcastSetElems", MaxBcastSetElems))
+  private def bcastHint(df: DataFrame, rowCap: (String, Long),
+      elems: Option[Column] = None): DataFrame => DataFrame = {
+    def cap(key: String, dflt: Long) = df.sparkSession.conf.getOption(key).fold(dflt)(_.toLong)
+    val a = df.agg(count(lit(1)), elems.map(e => sum(e)).toSeq: _*).head()
+    val nElems = if (a.length < 2 || a.isNullAt(1)) 0L else a.getLong(1)
+    if (a.getLong(0) <= cap(rowCap._1, rowCap._2) &&
+        nElems <= cap("graft.dedup.maxBcastSetElems", MaxBcastSetElems))
       broadcast else identity
   }
 
@@ -166,26 +166,29 @@ object DedupQueries {
   private val sigCache = new graft.util.Memo[(String, String), DataFrame]
 
   private[dedup] def signatures(spark: SparkSession, dir: String): DataFrame =
-    sigCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      // r19 (verdict item 6): minhash is order/multiplicity-invariant
-      // (array_min over the distinct sorted set == over the raw token
-      // multiset), so a doc's signature IS its set class's — computed
-      // once per CLASS from the universe's rep sets and expanded through
-      // the doc→srep map, instead of this memo paying a second
-      // full-corpus tokenize + 16-perm pass. NULL-text docs keep their
-      // all-NULL-slot signature rows (the c137 re-slicer and its oracle
-      // both bucket them; the universe excludes them by contract) —
-      // signature(NULL ths) evaluates to the 16-NULL array without
-      // tokenizing anything.
-      val u = setClassUniverse(spark, dir)
-      val expanded = u.docMap
-        .join(narrowHint(u.reps)(u.reps.select(col("doc_id").as("srep"),
-          signature(col("s")).as("sig"))), "srep")
-        .select(col("doc_id"), col("sig"))
-      val nulls = Tables.documents(spark, dir).filter(col("text").isNull)
-        .select(col("doc_id"), signature(shingleHashes(col("text"))).as("sig"))
-      expanded.unionByName(nulls).seal()
-    })
+    sigCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
+      signaturesOf(setClassUniverse(spark, dir), Tables.documents(spark, dir)).seal())
+
+  /** The [[signatures]] memo's body, unsealed. r19 (verdict item 6): minhash is order/multiplicity-invariant
+    * (array_min over the distinct sorted set == over the raw token
+    * multiset), so a doc's signature IS its set class's — computed once
+    * per CLASS from the universe's rep sets and expanded through the
+    * doc→srep map, instead of the memo paying a second full-corpus
+    * tokenize + 16-perm pass; its gate counts [[NumPerms]] elements a
+    * row without computing a signature. NULL-text docs keep their all-NULL-slot
+    * signature rows (the c137 re-slicer and its oracle both bucket them;
+    * the universe excludes them by contract) — signature(NULL ths)
+    * evaluates to the 16-NULL array without tokenizing anything.
+    */
+  private[dedup] def signaturesOf(u: SetClassUniverse, docs: DataFrame): DataFrame = {
+    val hint = bcastHint(u.reps, RepRows, Some(lit(NumPerms)))
+    val expanded = u.docMap
+      .join(hint(u.reps.select(col("doc_id").as("srep"), signature(col("s")).as("sig"))), "srep")
+      .select(col("doc_id"), col("sig"))
+    val nulls = docs.filter(col("text").isNull)
+      .select(col("doc_id"), signature(shingleHashes(col("text"))).as("sig"))
+    expanded.unionByName(nulls)
+  }
 
   /** Signature-supernode pair generation. Duplicate-heavy corpora (the
     * normal case for LLM training data — and extreme here) collapse
@@ -213,8 +216,8 @@ object DedupQueries {
       // pairs in either form (NULL band keys never equi-join, and the
       // universe excludes them by contract).
       val u = setClassUniverse(spark, dir)
-      val hintM = narrowHint(u.docMap)
       val dm = u.docMap
+      val hintM = bcastHint(dm, GroupRows)
       val cross = u.repCands
         .join(hintM(dm.select(col("srep").as("doc_a"), col("doc_id").as("da"))), "doc_a")
         .join(hintM(dm.select(col("srep").as("doc_b"), col("doc_id").as("db"))), "doc_b")
@@ -264,16 +267,14 @@ object DedupQueries {
       // band agreement between distinct groups: dup-heavy corpora
       // collapse docs onto few signatures, so `groups` is usually the
       // small (broadcastable) side — but only USUALLY: the hint is
-      // count-gated on |groups| ITSELF (one cheap groupBy-count job
-      // over the sealed sigs blocks) so a diverse ~|docs|-signature
-      // corpus falls back to plain equi-joins under AQE instead of a
-      // driver-sized broadcast build (see the dispatch scaladoc above).
-      // Gating on |sigs| — an upper bound — would silently drop the
-      // fast path on exactly the dup-heavy >4M-doc corpora the hint
-      // was added for (|groups| tiny, |sigs| huge).
-      val hintG: DataFrame => DataFrame =
-        if (groups.count() <= confLong(sigs, "graft.dedup.maxBcastGroups", MaxBcastGroups))
-          broadcast else identity
+      // gated on |groups| ITSELF (one cheap groupBy-count job over the
+      // sealed sigs blocks) so a diverse ~|docs|-signature corpus falls
+      // back to plain equi-joins under AQE instead of a driver-sized
+      // broadcast build (see the dispatch scaladoc above). Gating on
+      // |sigs| — an upper bound — would silently drop the fast path on
+      // exactly the dup-heavy >4M-doc corpora the hint was added for
+      // (|groups| tiny, |sigs| huge).
+      val hintG = bcastHint(groups, GroupRows)
       val members = sigs.join(hintG(groups), bhCols)
         .select(col("gid"), col("doc_id"))
       val gpairs = (0 until Bands).map { bn =>
@@ -316,8 +317,7 @@ object DedupQueries {
     * more than the per-pair kernel it deduplicates — measured at sf0.1
     * (ratio 1.27): doc-level 0.68 s vs compressed 1.90 s min-of-3
     * interleaved A/B. Dup-heavy corpora (the 100 TB LLM-curation case,
-    * where text-level ratios run 2–100×) take the compressed path;
-    * `graft.dedup.c7.impl` (docs|classes) overrides for specs.
+    * where text-level ratios run 2–100×) take the compressed path.
     */
   val C7ClassRatio = 2L
 
@@ -335,15 +335,14 @@ object DedupQueries {
     // measured class ratio (see [[C7ClassRatio]]); BOTH forms are pinned
     // against the doc-level reference in ClassCompressionSpec.
     val u = setClassUniverse(spark, dir)
-    val nDocs = u.textMap.count()
-    val nText = u.textReps.count()
-    val impl = spark.conf.getOption("graft.dedup.c7.impl")
-      .getOrElse(if (nText * C7ClassRatio <= nDocs) "classes" else "docs")
-    if (impl == "docs") return c7DocLevel(spark, dir)
+    if (Dispatch.engine(spark, "graft.dedup.c7.impl", ("classes", "docs"),
+        u.textReps.count() * C7ClassRatio <= u.textMap.count()) == "docs")
+      return c7DocLevel(spark, dir)
     val rs = u.textReps.select(col("rep"), col("srep"))
-    val hintR = narrowHint(rs)
+    val hintR = bcastHint(rs, GroupRows)
     val tsets = u.textReps.select(col("rep"),
       array_distinct(tokens(col("text"))).as("ws"))
+    val hintW = bcastHint(tsets, RepRows, Some(size(col("ws"))))
     val crossT = u.repCands
       .join(hintR(rs.select(col("srep").as("doc_a"), col("rep").as("ra"))), "doc_a")
       .join(hintR(rs.select(col("srep").as("doc_b"), col("rep").as("rb"))), "doc_b")
@@ -355,13 +354,13 @@ object DedupQueries {
     // the kernel: once per text-class pair (string sets are class-bound
     // payloads here, never join keys)
     val scoredT = crossT.unionByName(intraT)
-      .join(hintR(tsets.select(col("rep").as("ra"), col("ws").as("sa"))), "ra")
-      .join(hintR(tsets.select(col("rep").as("rb"), col("ws").as("sb"))), "rb")
+      .join(hintW(tsets.select(col("rep").as("ra"), col("ws").as("sa"))), "ra")
+      .join(hintW(tsets.select(col("rep").as("rb"), col("ws").as("sb"))), "rb")
       .select(col("ra"), col("rb"),
         round(size(array_intersect(col("sa"), col("sb"))).cast("double")
           / size(array_union(col("sa"), col("sb"))), 6).as("jaccard"))
     val tm = u.textMap
-    val hintM = narrowHint(tm)
+    val hintM = bcastHint(tm, GroupRows)
     val cross = scoredT
       .join(hintM(tm.select(col("rep").as("ra"), col("doc_id").as("da"))), "ra")
       .join(hintM(tm.select(col("rep").as("rb"), col("doc_id").as("db"))), "rb")
@@ -451,7 +450,7 @@ object DedupQueries {
     // and ships the pair frame WITH both hash arrays attached — a
     // 210 MB shuffle measured at sf0.1 where the broadcast form
     // shuffles zero. Same dispatch rule as scoredRepPairsFor.
-    val hintS = setsHint(u.reps)
+    val hintS = bcastHint(u.reps, RepRows, Some(size(col("s"))))
     val sets = u.reps.select(col("doc_id"), col("s"))
       .withColumn("ns", size(col("s")))
     val cross = u.repCands
@@ -870,7 +869,7 @@ object DedupQueries {
     // (n_common = na = nb = |s|, cont = 10⁶ exactly). Pinned against
     // the doc-level reference in ClassCompressionSpec.
     val u = setClassUniverse(spark, dir)
-    val hintS = setsHint(u.reps)
+    val hintS = bcastHint(u.reps, RepRows, Some(size(col("s"))))
     val sets = u.reps.select(col("doc_id"), col("s"))
       .withColumn("ns", size(col("s")).cast("long"))
     val scoredC = u.repCands.select("doc_a", "doc_b")
@@ -881,7 +880,7 @@ object DedupQueries {
       .select(col("doc_a"), col("doc_b"),
         expr("sorted_intersect_count(sa, sb)").as("nc"), col("ka"), col("kb"))
     val dm = u.docMap
-    val hintM = narrowHint(dm)
+    val hintM = bcastHint(dm, GroupRows)
     val cross = scoredC
       .join(hintM(dm.select(col("srep").as("doc_a"), col("doc_id").as("da"))), "doc_a")
       .join(hintM(dm.select(col("srep").as("doc_b"), col("doc_id").as("db"))), "doc_b")
@@ -956,7 +955,7 @@ object DedupQueries {
     val k = u.docMap.groupBy("srep").agg(count(lit(1)).as("kk"))
     // gated broadcast hints — the sealed rep frames carry no size
     // statistics, see the c60 comment (210 MB array shuffle otherwise)
-    val hintS = setsHint(u.reps)
+    val hintS = bcastHint(u.reps, RepRows, Some(size(col("s")) + NumPerms))
     val sigs = u.reps
       .select(col("doc_id"), signature(col("s")).as("sig"), col("s").as("hs"))
     val cross = u.repCands.select("doc_a", "doc_b")
@@ -1393,13 +1392,10 @@ object DedupQueries {
     val hdocs = docs.select(col("doc_id"), d1(col("text")).as("h1"),
       d2(col("text")).as("h2")).seal()
     val textClasses = hdocs.groupBy("h1", "h2").agg(min("doc_id").as("rep"))
-    // |text classes| gate, same dispatch rule as the supernode groups:
-    // narrow 3-long rows, broadcastable to ~4M classes; above it every
-    // class join is a plain long-keyed equi-join under AQE
-    val hintT: DataFrame => DataFrame =
-      if (textClasses.count() <=
-          confLong(hdocs, "graft.dedup.maxBcastGroups", MaxBcastGroups))
-        broadcast else identity
+    // |text classes| gate, same row cap as the supernode groups: narrow
+    // 3-long rows, broadcastable to ~4M classes; above it every class
+    // join is a plain long-keyed equi-join under AQE
+    val hintT = bcastHint(textClasses, GroupRows)
     val repText = docs
       .join(hintT(textClasses.select(col("rep").as("doc_id"))), "doc_id")
       .select(col("doc_id"), col("text"))
@@ -1419,19 +1415,11 @@ object DedupQueries {
     (textMap, textReps, reps)
   }
 
-  /** Count-gated broadcast hint for a narrow class-keyed frame (ids and
-    * sizes only — the set/sig ARRAY frames go through [[setsHint]]'s
-    * bytes gate instead).
-    */
-  private def narrowHint(df: DataFrame): DataFrame => DataFrame =
-    if (df.count() <= confLong(df, "graft.dedup.maxBcastGroups", MaxBcastGroups))
-      broadcast else identity
-
   private[dedup] def setClassUniverse(spark: SparkSession, dir: String): SetClassUniverse =
     universeCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
       val (textMap, textReps, reps) = setClassStar(Tables.documents(spark, dir))
-      val docMap = textMap
-        .join(narrowHint(textReps)(textReps.select(col("rep"), col("srep"))), "rep")
+      val rs = textReps.select(col("rep"), col("srep"))
+      val docMap = textMap.join(bcastHint(rs, GroupRows)(rs), "rep")
         .select(col("doc_id"), col("srep")).seal()
       SetClassUniverse(docMap, textMap, textReps, reps,
         candidatePairsFor(reps).seal())
@@ -1450,9 +1438,9 @@ object DedupQueries {
     */
   private def scoreRepCands(reps: DataFrame, cands: DataFrame,
       minJac: Double): DataFrame = {
-    // count+bytes-gated hint — plain equi-joins above the gate (see
+    // rows+elements-gated hint — plain equi-joins above the gate (see
     // the dispatch scaladoc at the top of this object)
-    val hintS = setsHint(reps)
+    val hintS = bcastHint(reps, RepRows, Some(size(col("s"))))
     val sets = reps.select(col("doc_id"), col("s")).withColumn("ns", size(col("s")))
     cands
       .join(hintS(sets.select(col("doc_id").as("doc_a"),

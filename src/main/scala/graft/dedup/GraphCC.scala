@@ -3,7 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.tiles.Clustering.{MinUnionFind, engine, lblSum}
+import graft.tiles.Clustering.{MinUnionFind, lblSum}
+import graft.util.Dispatch
 import graft.util.Seal._
 
 /** Generic min-label connected components over an arbitrary undirected
@@ -50,7 +51,8 @@ object GraphCC {
     // subtree per job. Lazy, so a rejected engine name runs no job.
     lazy val e0 = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).seal()
-    engine(vertices.sparkSession, "graft.gcc.impl", e0.count(), SmallGraphMax) match {
+    Dispatch.engine(vertices.sparkSession, "graft.gcc.impl", ("local", "df"),
+        e0.count() <= SmallGraphMax) match {
       case "local" => ccLocal(vertices, e0)
       case _ => ccDf(vertices, e0, maxIter)
     }

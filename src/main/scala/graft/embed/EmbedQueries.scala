@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.vector.{vec_dot, vec_norm2}
+import graft.util.Dispatch
 import graft.util.Seal._
 
 /** SURVEY.md §2 block C9–C11: embedding similarity over `embeddings`
@@ -1366,8 +1367,7 @@ object EmbedQueries {
     * all values non-negative, so the result is bit-identical; the
     * dispatch spec pins local == df). Above the cap — any real corpus,
     * where the kNN/co-occurrence graph is corpus-sized — the
-    * DataFrame iterate runs unchanged. `graft.pr.impl` (local|df)
-    * overrides for specs.
+    * DataFrame iterate runs unchanged.
     *
     * Heap bound at the cap (r18 advice): the local task buffers edges
     * as two primitive-long arrays plus per-node rank/degree maps — at
@@ -1389,11 +1389,9 @@ object EmbedQueries {
         Seq("id"), "left")
       .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"))
       .seal()
-    val nE = edges.count()
-    val impl = spark.conf.getOption("graft.pr.impl")
-      .getOrElse(if (nE <= PrLocalMaxEdges) "local" else "df")
     val ranks =
-      if (impl == "local") prLocal(spark, degt, edges, nTotal)
+      if (Dispatch.engine(spark, "graft.pr.impl", ("local", "df"),
+          edges.count() <= PrLocalMaxEdges) == "local") prLocal(spark, degt, edges, nTotal)
       else prDf(degt, edges, nTotal)
     degt.join(ranks, "id")
       .select(col("id").as("vec_id"), col("deg"), col("r").as("rank_nano"))
@@ -1658,14 +1656,11 @@ object EmbedQueries {
     // (cos desc, cand) rank) runs in ONE mapPartitions task; above them
     // the DataFrame walk is the corpus-scale path, unchanged — and
     // beamWalk itself stays untouched for c136's sweep and the
-    // ScaleSmoke frontier pin. `graft.beam.impl` overrides for specs
-    // (and then skips the gate's two count jobs).
-    val impl = spark.conf.getOption("graft.beam.impl").getOrElse {
+    // ScaleSmoke frontier pin.
+    val impl = Dispatch.engine(spark, "graft.beam.impl", ("local", "df"), {
       val nVec = e.count()
-      val nEdge = und.count()
-      if (nEdge <= PrLocalMaxEdges && nVec <= KcLocalMaxVectors
-        && nVec * Dims <= KcLocalMaxElems) "local" else "df"
-    }
+      und.count() <= PrLocalMaxEdges && nVec <= KcLocalMaxVectors && nVec * Dims <= KcLocalMaxElems
+    })
     val beam =
       if (impl == "local") {
         val entryOpt = if (entryRow.isNullAt(0)) None else Some(entryRow.getLong(0))
@@ -2810,14 +2805,11 @@ object EmbedQueries {
     // executor task; above it the K-pass DataFrame loop is the honest
     // corpus-scale shape. Dims are uniform by the embeddings contract
     // (every embed kernel — dot, cosine — already assumes it).
-    // `graft.kc.impl` overrides for the dispatch spec.
-    val nVec = e.count()
-    val impl = spark.conf.getOption("graft.kc.impl")
-      .getOrElse(if (nVec <= KcLocalMaxVectors
-        && nVec * Dims <= KcLocalMaxElems) "local" else "df")
-    val centers =
-      if (impl == "local") kcLocal(e, seed)
-      else kcDf(e, seed)
+    val impl = Dispatch.engine(spark, "graft.kc.impl", ("local", "df"), {
+      val nVec = e.count()
+      nVec <= KcLocalMaxVectors && nVec * Dims <= KcLocalMaxElems
+    })
+    val centers = if (impl == "local") kcLocal(e, seed) else kcDf(e, seed)
     centers.toDF("step", "center_id", "radius_micro").orderBy("step")
   }
 

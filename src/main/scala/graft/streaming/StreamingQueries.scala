@@ -1895,6 +1895,14 @@ object StreamingQueries {
     "d38_stream_snapshot_dedup", "d24_stream_drift", "d16_stream_cluster",
     "d9_stream_sessions_native", "d17_stream_pack", "d10_stream_distinct_sketch")
 
+  /** The replay pool's width from `graft.stream.replayPar` (default 8):
+    * a positive integer, capped at `replays` (a worker past the queue's
+    * end exits at once); anything else is rejected naming the key.
+    */
+  private[graft] def replayWidth(conf: Option[String], replays: Int): Int =
+    math.min(replays, conf.fold(8)(v => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"graft.stream.replayPar=$v: expected a positive integer"))))
+
   /** Run every D-block replay once, overlapped. Pool width: the replays
     * are scheduler/IO-bound (tiny data at bench SF; micro-batch planning
     * and state-store commits dominate), so the width is about keeping
@@ -1903,7 +1911,7 @@ object StreamingQueries {
     * cluster would size it to its driver, like StatePartitions).
     */
   private[graft] def replayAll(spark: SparkSession, sfDir: String): Unit = {
-    val par = spark.conf.getOption("graft.stream.replayPar").map(_.toInt).getOrElse(8)
+    val par = replayWidth(spark.conf.getOption("graft.stream.replayPar"), queries.size)
     val rank = replayHeavyFirst.zipWithIndex.toMap
     val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]
     queries.keys.toSeq.sortBy(n => (rank.getOrElse(n, Int.MaxValue), n))
@@ -1921,7 +1929,7 @@ object StreamingQueries {
         name = queue.poll()
       }
     })
-    val threads = (1 to math.max(1, par)).map(_ => worker())
+    val threads = (1 to par).map(_ => worker())
     threads.foreach(_.start())
     threads.foreach(_.join())
     // fail the prep line loudly; the memo holder retries a failed body,

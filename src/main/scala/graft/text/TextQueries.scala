@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.Dispatch
 import graft.util.Seal._
 
 /** SURVEY.md §2 block C1–C5: text-pipeline operators over `documents`.
@@ -3605,17 +3606,15 @@ object TextQueries {
     * tie order, left-to-right non-overlap, original positions kept,
     * empty-best ⇒ empty stream semantics) runs in ONE mapPartitions
     * task; above it the DF loop is the corpus path, unchanged.
-    * `graft.bpeloop.impl` (local|df) overrides for specs; TextDedupSpec's
-    * planted traces and the dispatch pin drive both forms.
+    * TextDedupSpec's planted traces and the dispatch pin drive both
+    * forms.
     */
   private def bpeLoop(docs: DataFrame,
-      iters: Int = BpeIters): (Seq[DataFrame], DataFrame) = {
-    val nTok = docs.agg(coalesce(sum(size(tokens(col("text"))).cast("long")),
-      lit(0L))).head.getLong(0)
-    val impl = docs.sparkSession.conf.getOption("graft.bpeloop.impl")
-      .getOrElse(if (nTok <= BpeLocalMaxTokens) "local" else "df")
-    if (impl == "local") bpeLoopLocal(docs, iters) else bpeLoopDf(docs, iters)
-  }
+      iters: Int = BpeIters): (Seq[DataFrame], DataFrame) =
+    if (Dispatch.engine(docs.sparkSession, "graft.bpeloop.impl", ("local", "df"),
+        docs.agg(coalesce(sum(size(tokens(col("text"))).cast("long")), lit(0L)))
+          .head.getLong(0) <= BpeLocalMaxTokens) == "local") bpeLoopLocal(docs, iters)
+    else bpeLoopDf(docs, iters)
 
   /** Single-task loop for small corpora — one executor task, the
     * bpeLearnLocal mechanics extended with the summary statistics and
@@ -3927,7 +3926,6 @@ object TextQueries {
     * runs as ONE mapPartitions task with the identical greedy
     * recurrence. Above the cap the DF loop runs unchanged (a 100 TB
     * corpus's 1/SegmentSampleMod sample is not driver-task-sized).
-    * `graft.bpe.impl` (local|df) overrides for specs.
     *
     * Heap bound at the cap (r18 advice): the local task buffers the
     * sample as String-array docs — 4M tokens of the corpus's ~40-word
@@ -3947,10 +3945,9 @@ object TextQueries {
       // deterministic); a production run sizes this to sample/128MB.
       val sample = Tables.documents(spark, dir)
         .filter(col("doc_id") % SegmentSampleMod === 0)
-      val nTok = sample.agg(coalesce(sum(size(tokens(col("text")))
-        .cast("long")), lit(0L))).head.getLong(0)
-      val impl = spark.conf.getOption("graft.bpe.impl")
-        .getOrElse(if (nTok <= BpeLocalMaxTokens) "local" else "df")
+      val impl = Dispatch.engine(spark, "graft.bpe.impl", ("local", "df"),
+        sample.agg(coalesce(sum(size(tokens(col("text"))).cast("long")), lit(0L)))
+          .head.getLong(0) <= BpeLocalMaxTokens)
       val merges =
         if (impl == "local") bpeLearnLocal(sample, SegmentMerges)
         else {
@@ -6137,12 +6134,11 @@ object TextQueries {
     // scheduling floor on a vocab-sized graph — runs as ONE
     // mapPartitions task with the identical integer recurrence
     // (bit-identical; dispatch spec pins local == df). The DataFrame
-    // iterate below is the corpus-scale path. `graft.tr.impl` overrides.
-    val nE = edges.count()
-    val impl = spark.conf.getOption("graft.tr.impl")
-      .getOrElse(if (nE <= graft.embed.EmbedQueries.PrLocalMaxEdges) "local" else "df")
+    // iterate below is the corpus-scale path.
     val ranks =
-      if (impl == "local") trLocal(spark, st, edges, nTotal)
+      if (Dispatch.engine(spark, "graft.tr.impl", ("local", "df"),
+          edges.count() <= graft.embed.EmbedQueries.PrLocalMaxEdges) == "local")
+        trLocal(spark, st, edges, nTotal)
       else trDf(st, edges, nTotal)
     st.join(ranks, "tok")
       .select(col("tok"), col("deg"), col("s"), col("r").as("rank_nano"))

@@ -4,6 +4,7 @@ package graft.tiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Dispatch
 import graft.util.Seal._
 
 /** Connected components of positive tiles under 4-neighbor adjacency —
@@ -60,30 +61,16 @@ object Clustering {
     * `mapPartitions` union-find task, adjacency implicit (each id unions
     * with id+1 / id+2^32 when present, so no edge list is ever
     * materialized). Larger sets take the `df` loop (class doc).
-    * `graft.cc.impl` forces either engine; the size count then never
-    * runs.
     */
   def connectedComponents4(cells: DataFrame, maxIter: Int = 60): DataFrame = {
     lazy val keys = cells.select(col("x").cast("long").as("x"), col("y").cast("long").as("y"))
       .distinct().seal()
-    engine(cells.sparkSession, "graft.cc.impl", keys.count(), SmallLoopMax) match {
+    Dispatch.engine(cells.sparkSession, "graft.cc.impl", ("local", "df"),
+        keys.count() <= SmallLoopMax) match {
       case "local" => ccLocal(keys)
       case _ => ccDf(keys, maxIter)
     }
   }
-
-  /** The size gate of both CC modules: the engine the session conf
-    * `key` forces, else `local` up to `max` items, else `df`. `n` is
-    * evaluated only when no engine is forced. The conf comes from
-    * outside the program, so a value other than `local` or `df` is
-    * rejected before any job runs instead of silently running `df`.
-    */
-  private[graft] def engine(spark: SparkSession, key: String, n: => Long, max: Long): String =
-    spark.conf.getOption(key) match {
-      case Some(v @ ("local" | "df")) => v
-      case Some(v) => throw new IllegalArgumentException(s"$key=$v: expected local|df")
-      case None => if (n <= max) "local" else "df"
-    }
 
   /** Path-compressing union-find over long ids, unioning by MIN so a
     * component's root IS its smallest id — the single-task kernel of
@@ -323,8 +310,8 @@ object Clustering {
   def incrementalClusters(existing: DataFrame, newCells: DataFrame): DataFrame = {
     val exist = existing.select(col("x").cast("long").as("x"),
       col("y").cast("long").as("y"), col("cluster_id").cast("long").as("cluster_id"))
-    val labeledNew = engine(existing.sparkSession, "graft.cc.impl", newCells.count(),
-        SmallLoopMax) match {
+    val labeledNew = Dispatch.engine(existing.sparkSession, "graft.cc.impl", ("local", "df"),
+        newCells.count() <= SmallLoopMax) match {
       case "local" => incrementalLocal(exist, newCells)
       case _ => incrementalPlan(exist, newCells)
     }

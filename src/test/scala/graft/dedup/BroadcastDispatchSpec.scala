@@ -80,6 +80,53 @@ class BroadcastDispatchSpec extends SparkTestBase {
     }
   }
 
+  /** Hints whose build side projects any of `cols`. */
+  private def hintsOn(df: DataFrame, cols: String*): Int =
+    df.queryExecution.analyzed.collect {
+      case h: ResolvedHint if h.output.exists(a => cols.contains(a.name)) => h
+    }.size
+
+  test("c7 class path: the token-set joins are gated by array elements, same rows") {
+    def c7(confs: (String, String)*): (Int, Int, Seq[String]) = {
+      var out: (Int, Int, Seq[String]) = null
+      withConfs(("graft.dedup.c7.impl" -> "classes") +: confs: _*) {
+        val df = DedupQueries.c7NgramJaccard(spark, sf)
+        val sets = hintsOn(df, "sa", "sb")
+        out = (sets, hintCount(df) - sets, df.collect().map(_.toString).toSeq)
+      }
+      out
+    }
+    val (setHints, narrowHints, want) = c7()
+    assert(setHints == 2, "token-set joins lost their hints below the gate")
+    assert(want.nonEmpty, "degenerate fixture: no c7 rows at all")
+    val (plainSets, plainNarrow, got) = c7("graft.dedup.maxBcastSetElems" -> "0")
+    assert(plainSets == 0,
+      "token-array frame broadcast under a row-only gate with maxBcastSetElems=0")
+    assert(plainNarrow == narrowHints && narrowHints > 0,
+      "the narrow class-map joins changed their hints")
+    assert(got == want, "the element gate changed c7's rows")
+  }
+
+  test("signatures: the per-class signature join is gated by its 16 slots a row, same rows") {
+    val u = DedupQueries.setClassUniverse(spark, sf)
+    val docs = graft.Tables.documents(spark, sf)
+    def sigs(confs: (String, String)*): (Int, Seq[String]) = {
+      var out: (Int, Seq[String]) = null
+      withConfs(confs: _*) {
+        val df = DedupQueries.signaturesOf(u, docs)
+        out = (hintsOn(df, "sig"), df.collect().map(_.toString).toSeq.sorted)
+      }
+      out
+    }
+    val (hinted, want) = sigs()
+    assert(hinted == 1, "signature join lost its hint below the gate")
+    assert(want.nonEmpty, "degenerate fixture: no signatures at all")
+    val (plain, got) = sigs("graft.dedup.maxBcastSetElems" -> "0")
+    assert(plain == 0,
+      "signature frame broadcast under a row-only gate with maxBcastSetElems=0")
+    assert(got == want, "the element gate changed the signatures")
+  }
+
   test("scored rep pairs: sets hint gated by rows AND array bytes, same edges") {
     val docs = diverseDocs(200).localCheckpoint(true)
     val hinted = DedupQueries.scoredRepPairsFor(docs, 0.5)

@@ -22,6 +22,17 @@ class StreamingSpec extends SparkTestBase {
 
   private lazy val stagedDir = StreamingOps.stageEventsDir(spark, sf)
 
+  test("graft.stream.replayPar: a positive integer, capped at the replay count") {
+    // the parse alone: no replay runs and no thread starts here
+    assert(StreamingQueries.replayWidth(None, 42) == 8)
+    assert(StreamingQueries.replayWidth(Some("3"), 42) == 3)
+    assert(StreamingQueries.replayWidth(Some("100000"), 42) == 42)
+    for (bad <- Seq("x", "0", "-3")) {
+      val e = intercept[IllegalArgumentException](StreamingQueries.replayWidth(Some(bad), 42))
+      assert(e.getMessage.contains("graft.stream.replayPar"), e.getMessage)
+    }
+  }
+
   test("split staging: k files, lossless, event-time-ordered, ties never straddle") {
     val dir = StreamingOps.stageTableDirSplit(spark, sf, "events", 4, seed = 7L)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
